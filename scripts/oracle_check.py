@@ -95,7 +95,7 @@ def main():
     con.execute("SET temp_directory='/tmp/duck_spill'")
     for t in TABLES:
         p = os.path.join(sfdir, f"{t}.parquet")
-        if os.path.isdir(p):  # Spark directory table (e.g. a ScaleGen corpus)
+        if os.path.isdir(p):  # Spark directory table (e.g. a generated 10x corpus)
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}/*.parquet')")
         elif os.path.exists(p):

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main class against the compiled classes without sbt
 # (avoids concurrent-sbt target-dir races). Usage:
-#   scripts_runmain.sh graft.ZipfGen arg1 arg2 ...
+#   scripts_runmain.sh graft.Verify arg1 arg2 ...
 CLS="$1"; shift
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \

@@ -1,97 +1,97 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  // two timed passes per query, report the min (JMH-style steady
+  // state): pass 1 absorbs whole-stage-codegen compilation and JIT
+  // warmup per query shape, and the min damps same-box noise from
+  // unrelated load
+  val Passes = 2
+  // isolated runs per quiet floor re-measure (see floorKeys below)
+  val FloorPasses = 3
+
+  /** The timing step: min over `n` runs of one query's `count()`, then
+    * release of the operator-persisted intermediates (the library's
+    * cache contract — run 2 still reuses run 1's cached frames via plan
+    * matching; only the NEXT query starts cold, so cached frames never
+    * accumulate across the suite). A query that throws is recorded in
+    * [[failed]] with its first message line and is never timed: `time`
+    * returns None for it, now and on every later call. */
+  final class Timer(spark: SparkSession, sfDir: String) {
+    val failed = mutable.LinkedHashMap.empty[String, String]
+
+    def time(name: String, fn: Query, n: Int): Option[Double] =
+      if (failed.contains(name)) None
+      else try Some((1 to n).map { _ =>
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).count()
+          (System.nanoTime() - t0) / 1e9
+        }.min)
+      catch { case NonFatal(e) =>
+        failed(name) = e.toString.linesIterator.nextOption().getOrElse("")
+        None
+      } finally Caches.release(spark)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle partitions sized by DATA, not cores: sf0.1 shuffles are
-    // KB–MB, so >8 partitions is pure task-scheduling overhead
-    // (measured: local[32]×32 partitions ran 1.6× slower than
-    // local[4]×4). At cluster scale partition count follows
-    // bytes/128MB via AQE, never a fixed core count.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(cpus.toInt, 8).toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
+      // shuffle partitions sized by DATA, not cores: sf0.1 shuffles are
+      // KB–MB, so >8 partitions is pure task-scheduling overhead
+      // (measured: local[32]×32 partitions ran 1.6× slower than
+      // local[4]×4). At cluster scale partition count follows
+      // bytes/128MB via AQE, never a fixed core count.
+      .config("spark.sql.shuffle.partitions", math.min(cpus.toInt, 8).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // AQE ON by default (r14, VERDICT ask 1): the bench now runs the
-      // PRODUCTION configuration — the one Verify, every spec, and a
-      // 100 TB deployment use — so the headline number and the plans
-      // it times are the shipped ones. The cost is latency-only and
-      // re-measured every round since r8: at sf0.1 every shuffle is
-      // KB-sized, so AQE's per-stage materialization adds ~0.1 s/query
-      // of stage-barrier scheduling (~2.2× total at this SF; at real
-      // shuffle sizes AQE pays for itself in coalescing/skew splits).
-      // SPARK_GRAFT_AQE=0 keeps the old latency-optimized harness mode
-      // for apples-to-apples comparison with pre-r14 records.
-      .config("spark.sql.adaptive.enabled",
-        (sys.env.getOrElse("SPARK_GRAFT_AQE", "1") == "1").toString)
+      // AQE ON (r14, VERDICT ask 1): the bench runs the PRODUCTION
+      // configuration — the one Verify, every spec, and a 100 TB
+      // deployment use — so the headline number and the plans it times
+      // are the shipped ones. The cost is latency-only: at sf0.1 every
+      // shuffle is KB-sized, so AQE's per-stage materialization adds
+      // ~0.1 s/query of stage-barrier scheduling (~2.2× total at this
+      // SF; at real shuffle sizes AQE pays for itself in
+      // coalescing/skew splits).
+      .config("spark.sql.adaptive.enabled", "true")
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm up JVM/codegen/IO paths so the first timed query doesn't
     // absorb session bring-up (~5 s otherwise)
     spark.range(1000).selectExpr("sum(id)").collect()
-    SparkEntry.queries.headOption.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    val timer = new Timer(spark, sfDir)
+    SparkEntry.queries.headOption.foreach { case (name, fn) =>
+      timer.time(name, fn, 1)
     }
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    def time1(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val cache = sys.env.getOrElse("SPARK_GRAFT_CACHE", "1") == "1"
     // UNCACHED min-of-N passes first (pass 1 doubles as per-query
     // codegen/JIT warmup, the min is the steady-state cold-scan cost):
     // the disclosed-cache protocol reports BOTH totals, so the cached
     // headline number can always be compared against the parquet-scan
     // cost it hides
-    // min over passes, then release the operator-persisted
-    // intermediates (the library's cache contract — pass 2 still reuses
-    // pass 1's cached frames via plan matching; only the NEXT query
-    // starts cold, so cached frames never accumulate across the suite)
-    def timeQN(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-               n: Int): Double = {
-      val t = (1 to n).map(_ => time1(fn)).min
-      Caches.release(spark)
-      t
-    }
-    def timeQ(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
-      timeQN(fn, passes)
-    val uncachedTotal =
-      if (cache) SparkEntry.queries.values.map(timeQ).sum
-      else 0.0
+    val uncachedTotal = SparkEntry.queries
+      .flatMap { case (name, fn) => timer.time(name, fn, Passes) }.sum
     // pin the fixture tables in memory once: CacheManager substitutes
     // the InMemoryRelation into every query whose scan plan matches, so
     // 103 queries stop re-decoding the same parquet (the hot-table
     // cache any resident engine keeps; DuckDB gets the same effect from
-    // the OS page cache + its buffer pool). Disable with
-    // SPARK_GRAFT_CACHE=0.
-    // SPARK_GRAFT_PIN=0 keeps the two-phase protocol but skips the
-    // fixture-table pin — the control for attributing any cached-vs-
-    // uncached total inversion to the pin itself vs session aging
-    // (GC/block-manager growth across 400+ queries). r14's driver run
-    // showed cached 201.5 s > uncached 154.5 s; see SCALE.md §r15.
-    val pin = sys.env.getOrElse("SPARK_GRAFT_PIN", "1") == "1"
-    if (cache && pin) {
-      val tables: Seq[org.apache.spark.sql.DataFrame] = Seq(
-        Tables.region(spark, sfDir), Tables.nation(spark, sfDir),
-        Tables.customer(spark, sfDir), Tables.supplier(spark, sfDir),
-        Tables.part(spark, sfDir), Tables.orders(spark, sfDir),
-        Tables.lineitem(spark, sfDir), Tables.documents(spark, sfDir),
-        Tables.embeddings(spark, sfDir), Tables.events(spark, sfDir),
-        Tables.eventsWithNanos(spark, sfDir))
-      tables.foreach { df => df.cache(); df.count() }
-    }
-    // two timed passes per query, report the min (JMH-style steady
-    // state): pass 1 absorbs whole-stage-codegen compilation and JIT
-    // warmup per query shape, and the min damps same-box noise from
-    // unrelated load. Set SPARK_GRAFT_PASSES=1 for single-shot timing.
-    val suiteResults = SparkEntry.queries.map { case (name, fn) =>
-      name -> timeQ(fn)
+    // the OS page cache + its buffer pool). r14's driver run showed
+    // cached 201.5 s > uncached 154.5 s; the pin-skipped control that
+    // cleared the pin itself is in SCALE.md §r15.2.
+    val tables: Seq[DataFrame] = Seq(
+      Tables.region(spark, sfDir), Tables.nation(spark, sfDir),
+      Tables.customer(spark, sfDir), Tables.supplier(spark, sfDir),
+      Tables.part(spark, sfDir), Tables.orders(spark, sfDir),
+      Tables.lineitem(spark, sfDir), Tables.documents(spark, sfDir),
+      Tables.embeddings(spark, sfDir), Tables.events(spark, sfDir),
+      Tables.eventsWithNanos(spark, sfDir))
+    tables.foreach { df => df.cache(); df.count() }
+    val suiteResults = SparkEntry.queries.flatMap { case (name, fn) =>
+      timer.time(name, fn, Passes).map(name -> _)
     }
     // headline queries get a final quiet re-measure: suite order is Map
     // hash order, so adding queries reshuffles neighbors, and a headline
@@ -115,13 +115,12 @@ object Bench {
     // noise is most misleading, so it gets the same
     // not-preceded-by-arbitrary-neighbors re-run.
     // r16 (VERDICT r15 item 6): the quiet re-measure is the per-query
-    // steady-state FLOOR — min over SPARK_GRAFT_FLOOR_PASSES (default
-    // 3) isolated runs, TimeQ's protocol inlined. Totals on identical
-    // code swung 57.6–84.4 s across r15 runs (box weather); the floors
-    // map for the top-20 suite entries ships in the JSON so
+    // steady-state FLOOR — min over FloorPasses isolated runs, the
+    // protocol behind SCALE.md's isolated per-query timings. Totals on
+    // identical code swung 57.6–84.4 s across r15 runs (box weather);
+    // the floors map for the top-20 suite entries ships in the JSON so
     // round-over-round comparison can anchor on per-query minima
     // instead of the weather-dependent sum.
-    val floorPasses = sys.env.getOrElse("SPARK_GRAFT_FLOOR_PASSES", "3").toInt
     val topKeys = suiteResults.toSeq.sortBy(-_._2).take(20).map(_._1)
     // r17 (VERDICT r16 item 4): the floors map covers a FIXED
     // representative set — the 15 headliners plus the 10 historically
@@ -139,7 +138,8 @@ object Bench {
     val floorKeys = (headline ++ historicallySlowest).distinct
     val requiet = (floorKeys ++ topKeys).distinct
     val quietFloor = requiet.flatMap { k =>
-      SparkEntry.queries.get(k).map(fn => k -> timeQN(fn, floorPasses))
+      SparkEntry.queries.get(k).flatMap(fn => timer.time(k, fn, FloorPasses))
+        .map(k -> _)
     }.toMap
     val results = suiteResults ++ quietFloor.map { case (k, v) =>
       k -> math.min(suiteResults(k), v)
@@ -150,6 +150,9 @@ object Bench {
     results.toSeq.sortBy(-_._2).foreach { case (k, v) =>
       println(s"bench_detail $k ${f3(v)}")
     }
+    // a throwing query fails the run: named here, counted in the JSON,
+    // left out of every total, and the exit status is nonzero
+    timer.failed.foreach { case (k, msg) => println(s"bench_failed $k: $msg") }
     // the ONE machine-readable JSON line must fit the harness's
     // 2000-char tail buffer (round 1's full 88-query map was ~2.9 KB and
     // arrived truncated → unparseable), so `queries` carries the
@@ -169,10 +172,9 @@ object Bench {
     val floorsJson = floorKeys.flatMap(k => quietFloor.get(k)
         .map(v => s"\"$k\":${f3(v)}"))
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val unc = if (cache) uncachedTotal else total
-    println(s"bench_detail uncached_total ${f3(unc)}")
-    val jsonLine = s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"passes":$passes,"floor_passes":$floorPasses,"uncached":${f3(unc)},"queries":$qs,"slowest":$slow,"floors":$floorsJson,"sf":"$sfDir"}"""
+    val total = results.values.sum
+    println(s"bench_detail uncached_total ${f3(uncachedTotal)}")
+    val jsonLine = s"""{"metric":"total","value":${f3(total)},"unit":"sec","n_queries":${results.size},"failed":${timer.failed.size},"passes":$Passes,"floor_passes":$FloorPasses,"uncached":${f3(uncachedTotal)},"queries":$qs,"slowest":$slow,"floors":$floorsJson,"sf":"$sfDir"}"""
     println(jsonLine)
     // r20 (VERDICT r19 item 2): the driver failed to parse this line in
     // r18 AND r19 — it sat behind sbt's "[info] " prefix at the edge of
@@ -187,5 +189,6 @@ object Bench {
     } catch { case _: Throwable => () }
     System.err.println(jsonLine)
     spark.stop()
+    if (timer.failed.nonEmpty) sys.exit(1)
   }
 }

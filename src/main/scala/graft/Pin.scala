@@ -37,9 +37,9 @@ import org.apache.spark.storage.StorageLevel
   *  - `persist`: `persist(MEMORY_AND_DISK)` + a materializing count.
   *    NOT a true snapshot — blocks are evictable and the recompute
   *    path re-reads the (possibly mutated) source, exactly the
-  *    r14→r15 syncOnce hazard — offered for the A/B harness
-  *    ([[PinScale]]) and for sources known immutable (parquet
-  *    fixtures), where it skips the block copy localCheckpoint pays.
+  *    r14→r15 syncOnce hazard — offered for mode A/Bs (SCALE.md
+  *    §r16.2) and for sources known immutable (parquet fixtures),
+  *    where it skips the block copy localCheckpoint pays.
   *
   * Measured A/B + the 100 TB recommendation: SCALE.md §r16.2.
   */
@@ -82,7 +82,7 @@ object Pin {
     * [[ModeKey]]: a persist-pinned frame is registered in the SQL
     * CacheManager (storageLevel != NONE), checkpoint-pinned frames are
     * not — so flipping the knob between pin and unpin (across a
-    * micro-batch, or by A/B harness code like [[PinScale]]) cannot
+    * micro-batch, or by a mode A/B like SCALE.md §r16.2's) cannot
     * route a frame to the wrong release path and leak its storage. */
   def unpin(df: DataFrame): Unit =
     if (df.storageLevel != StorageLevel.NONE) df.unpersist(blocking = false)

@@ -8,6 +8,12 @@ import org.apache.spark.sql.SparkSession
   * — the evidence that scans prune/push down, dims broadcast, windows
   * use group limits, and the custom operator plans in. Regenerate with:
   *   sbt "runMain graft.PlanDump /root/testdata/sf0.01 PLANS.md"
+  * Given a suffix and query names, it instead writes one plan per query
+  * to `<outDir>/<query>_<suffix>.txt` — the per-round plan evidence
+  * files (plans/r19/...) the optimization journal cites:
+  *   scripts_runmain.sh graft.PlanDump <sfDir> <outDir> <suffix> q1 q2 ...
+  * Both outputs use the same session (AQE on, as in Verify) and the
+  * same plan text, so the two evidence surfaces stay comparable.
   */
 object PlanDump {
   val headline = Seq(
@@ -56,7 +62,6 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val out = args.lift(1).getOrElse("PLANS.md")
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
@@ -64,30 +69,41 @@ object PlanDump {
       .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
-    sb.append(s"Generated by `graft.PlanDump` at `$sfDir` (AQE on, as in ")
-    sb.append("Verify). What to look for: `PushedFilters`/`ReadSchema` on ")
-    sb.append("scans (pushdown + pruning), `BroadcastHashJoin` on dim ")
-    sb.append("joins, `WindowGroupLimit` under top-k windows, ")
-    sb.append("`TakeOrderedAndProject` for global top-k, and the custom ")
-    sb.append("`CosineKnn` operator planned into j_knn_per_vector.\n")
-    headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      sb.append(s"\n## $name\n\n```\n")
-      // giant literals (the bloom sketch renders as a megabyte of hex)
-      // add nothing to plan-shape evidence — keep lines readable
-      sb.append(df.queryExecution.explainString(
+    // giant literals (the bloom sketch renders as a megabyte of hex)
+    // add nothing to plan-shape evidence — keep lines readable
+    def plan(name: String): String =
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode).trim
         .linesIterator.map { l =>
           if (l.length > 400) l.take(400) + s"…[${l.length - 400} chars elided]"
           else l
-        }.mkString("\n"))
-      sb.append("\n```\n")
+        }.mkString("\n")
+    if (args.length >= 3) {
+      val outDir = Paths.get(args(1))
+      val suffix = args(2)
+      Files.createDirectories(outDir)
+      args.drop(3).foreach { name =>
+        val f = outDir.resolve(s"${name}_$suffix.txt")
+        Files.write(f, (plan(name) + "\n").getBytes(StandardCharsets.UTF_8))
+        println(s"wrote $f")
+      }
+    } else {
+      val out = args.lift(1).getOrElse("PLANS.md")
+      val sb = new StringBuilder
+      sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
+      sb.append(s"Generated by `graft.PlanDump` at `$sfDir` (AQE on, as in ")
+      sb.append("Verify). What to look for: `PushedFilters`/`ReadSchema` on ")
+      sb.append("scans (pushdown + pruning), `BroadcastHashJoin` on dim ")
+      sb.append("joins, `WindowGroupLimit` under top-k windows, ")
+      sb.append("`TakeOrderedAndProject` for global top-k, and the custom ")
+      sb.append("`CosineKnn` operator planned into j_knn_per_vector.\n")
+      headline.foreach { name =>
+        sb.append(s"\n## $name\n\n```\n${plan(name)}\n```\n")
+      }
+      Files.write(Paths.get(out),
+        sb.toString.getBytes(StandardCharsets.UTF_8))
+      println(s"wrote $out (${headline.size} plans)")
     }
-    Files.write(Paths.get(out),
-      sb.toString.getBytes(StandardCharsets.UTF_8))
-    println(s"wrote $out (${headline.size} plans)")
     spark.stop()
   }
 }

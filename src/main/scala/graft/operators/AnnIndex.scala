@@ -69,7 +69,7 @@ object AnnIndex {
   /** [[writeSized]] with the row count passed explicitly — for callers
     * indexing a frame that is NOT a plain parquet leaf (a split, a
     * filtered view), where a footer count of the backing file would
-    * silently size for the wrong n (ADVICE r15: the AnnScale A/B arm
+    * silently size for the wrong n (ADVICE r15: the SCALE.md §r15.4 A/B arm
     * indexed the 80% base split but sized k from the full corpus
     * footers, measuring sizedK(n) instead of sizedK(0.8n)). The (u, n)
     * pair is the caller's contract; n must be the row count of `u`

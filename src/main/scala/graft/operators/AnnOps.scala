@@ -61,7 +61,8 @@ object AnnOps {
   /** Seed cells = the 16 LOWEST vec_ids — RANK-based (r14): the old
     * `vec_id < 16` literal assumed an id space rooted at 0 and
     * silently yielded ZERO centroids (hence zero output) on any
-    * shifted id space — found by the ZipfGen corpora, whose ids start
+    * shifted id space — found by the Zipf corpora (SCALE.md Round-14,
+    * the near-dup-dominated corpus shape), whose ids start
     * at 10⁹. On the fixtures (contiguous ids from 0) the rank form is
     * value-identical. Plan cost: one 16-row sort-limit on (id, vec) —
     * broadcast-joined back, no full shuffle. */
@@ -267,7 +268,8 @@ object AnnOps {
   }
 
   /** Per-cell candidate-volume histogram for the IVF family (r19,
-    * VERDICT r18 item 6 — the TfidfProbe treatment): (cell, n_probes,
+    * VERDICT r18 item 6 — the candidate-count treatment SCALE.md
+    * §r18.3 addendum 2 gave j_sim_tfidf_pairs): (cell, n_probes,
     * n_cands) over the dup-collapsed reps, from which
     * Σ probes·cands IS the exact candidate-pair row count of
     * j_ann_ivf_kmeans / j_ann_ivf_pq (keepSelf pairing) — measured

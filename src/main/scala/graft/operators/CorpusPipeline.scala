@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Par, Tables}
+import graft.{Par, Pin, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -129,31 +129,17 @@ object CorpusPipeline {
     // is the spark.graft.pin.mode knob (r16, VERDICT r15 ask 4):
     // executor-local by default, reliable-dir checkpoint for pins
     // that must survive executor loss — A/B numbers in SCALE.md §r16.2.
-    // opt-in stage attribution for the profiling harness (ProfileAudit):
-    // pins are EAGER, so timing each pin call IS the stage cost
-    val prof = java.lang.Boolean.getBoolean("graft.profile.stages")
-    var stageNo = 0
-    def pin(df: DataFrame): DataFrame =
-      if (!prof) graft.Pin.pin(df)
-      else {
-        stageNo += 1
-        val t0 = System.nanoTime()
-        val r = graft.Pin.pin(df)
-        println(f"PROF stage$stageNo pin ${(System.nanoTime - t0) / 1e9}%.2f s")
-        r
-      }
-
     // 1. quality gate — heuristic or bigram-LM, see [[qualityStage]]
     val effGate = gate.getOrElse(
       s.conf.getOption(QualityGateKey).getOrElse("heuristic"))
-    val s1 = pin(qualityStage(s, d0, effGate, lmPrefix))
+    val s1 = Pin.pin(qualityStage(s, d0, effGate, lmPrefix))
 
     // 2. langid: keep docs whose predicted language (profiles learned
     //    on the stage input) confirms the labeled lang
     val keep2 = TextOps.langPredictions(s1)
       .filter(col("pred_lang") === col("lang"))
       .select("doc_id")
-    val s2 = pin(s1.join(keep2, "doc_id"))
+    val s2 = Pin.pin(s1.join(keep2, "doc_id"))
 
     // 3. dedup cascade: drop every doc the blocked cascade decides is
     //    a duplicate (rare-shingle blocking → exact verify → min-
@@ -166,7 +152,7 @@ object CorpusPipeline {
       .select(col("doc_id"), explode(col("sh")).as("shingle")))
     val dups = LlmOps.dedupCascadeBlocked(ex2, LlmOps.oracledDfCutoff(s),
       LlmOps.oracledTau(s)).select("doc_id")
-    val s3 = pin(s2.join(dups, Seq("doc_id"), "left_anti"))
+    val s3 = Pin.pin(s2.join(dups, Seq("doc_id"), "left_anti"))
 
     // 4. decontaminate: drop docs sharing ANY shingle with the
     //    benchmark set (the 5 LOWEST doc_ids of the ORIGINAL corpus —
@@ -183,14 +169,14 @@ object CorpusPipeline {
     val ex3 = ex2.join(s3.select("doc_id"), "doc_id")
     val contaminated = ex3.join(broadcast(benchSh), "shingle")
       .select("doc_id").distinct()
-    val s4 = pin(s3.join(contaminated, Seq("doc_id"), "left_anti"))
+    val s4 = Pin.pin(s3.join(contaminated, Seq("doc_id"), "left_anti"))
 
     // 5. mix downsample: equalize sources to the smallest one —
     //    deterministic keep-first-n_min-by-doc_id per source (the
     //    actionable form of j_sample_mix_weights' keep_rate)
     val nMin = s4.groupBy("source").agg(count(lit(1)).as("n_docs"))
       .agg(min("n_docs").as("n_min"))
-    val s5 = pin(s4
+    val s5 = Pin.pin(s4
       .withColumn("rk", row_number().over(
         Window.partitionBy("source").orderBy("doc_id")))
       .crossJoin(broadcast(nMin))
@@ -350,7 +336,7 @@ object CorpusPipeline {
         val thr = scored.agg(expr("percentile(lm_score, 0.25)").as("thr"))
         val keep = scored.crossJoin(broadcast(thr))
           .filter(col("lm_score") >= col("thr")).select("doc_id")
-        Par.spread(d0.join(keep, "doc_id")).transform(graft.Pin.pin)
+        Par.spread(d0.join(keep, "doc_id")).transform(Pin.pin)
       case None =>
         d0.withColumn("num", TextOps.qualityNum)
           .withColumn("q4",

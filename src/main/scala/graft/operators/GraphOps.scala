@@ -80,7 +80,8 @@ object GraphOps {
     * so task count should follow bytes (guide §6 bucket sizing,
     * ≈ bytes/128 MB with an 8-bucket floor), unlike the dedup postings
     * store whose per-row shingle compute justifies LlmOps.storeBuckets'
-    * core floor (the r7 IncScale lesson — a DIFFERENT cost model).
+    * core floor (the round-6 bucket-count lesson, SCALE.md Round-3
+    * addenda — a DIFFERENT cost model).
     * On local[32] the core-derived 32 buckets made every superstep
     * stage 32 tiny tasks over a KB graph: 5 supersteps of pure task
     * scheduling, measured floors 2.17 s (32 buckets) vs 1.57 s
@@ -134,8 +135,8 @@ object GraphOps {
     * caching it buys nothing — the five iterations pipeline as one
     * action with five shuffle rounds, and the per-iteration
     * persist+materialize this replaces cost five extra jobs
-    * (TimeQ r10: 3.6 → ~1.5 s at sf0.1). At an iteration count where
-    * plan depth itself becomes a planning cost (≫20), checkpoint every
+    * (SCALE.md Round-10 session-2 addenda: 3.6 → ~1.5 s at sf0.1). At
+    * an iteration count where plan depth itself becomes a planning cost (≫20), checkpoint every
     * k-th frame instead. */
   private[graft] def pagerank(s: SparkSession, d: String,
                               iterations: Int = 5): DataFrame = {

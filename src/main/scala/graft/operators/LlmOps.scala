@@ -919,12 +919,12 @@ object LlmOps {
     * LAYOUT decision (`spark.graft.store.buckets`): bucket-local stages
     * run one task per bucket, so the count caps the parallelism of
     * every later read. Size it like any bucket spec — ≈ table_bytes /
-    * 128 MB, at least the executor-core count you want busy (IncScale
-    * measured the 10× corpus going 1.3× SLOWER than in-flight at 8
-    * buckets on 32 cores, and beating it at 32). Default: the session's
-    * defaultParallelism (floor 8), so an untuned run gets one bucket
-    * per core instead of a fixed constant that under-parallelizes
-    * large boxes — exactly the regression IncScale measured. */
+    * 128 MB, at least the executor-core count you want busy (SCALE.md
+    * Round-3 addenda, round 6: the 10× corpus went 1.3× SLOWER than
+    * in-flight at 8 buckets on 32 cores, and beat it at 32). Default:
+    * the session's defaultParallelism (floor 8), so an untuned run gets
+    * one bucket per core instead of a fixed constant that under-parallelizes
+    * large boxes — exactly the regression measured there. */
   private[graft] def storeBuckets(s: SparkSession): Int =
     s.conf.getOption("spark.graft.store.buckets").map(_.toInt)
       .getOrElse(math.max(8, s.sparkContext.defaultParallelism))
@@ -1258,7 +1258,7 @@ object LlmOps {
     // corpus-snapshot artifacts — a search/dedup pipeline writes its
     // index ONCE and every batch reads it; the in-flight entry above
     // re-derives both per run and its ~3.5 s floor is ~all derivation
-    // (ProfileTfidf: w-build 0.9 s + candidates 2.7 s steady vs a
+    // (SCALE.md §r19.7: w-build 0.9 s + candidates 2.7 s steady vs a
     // ~100 k-pair verify). Same prune+merge code path
     // ([[tfidfPairsFrom]] — the j_pipeline_audit shared-stage
     // discipline), vectors/candidates read from bucketed catalog
@@ -1512,7 +1512,7 @@ object LlmOps {
     // returns the IVF-cell sibling j_knn_ivf instead: identical
     // (vec_id, maj_label, votes) schema, neighbors restricted to the
     // probe's inverted list. Label agreement vs exact is quantified by
-    // graft.BruteRecall and floor-pinned in BruteRouteRecallSpec —
+    // SCALE.md §r18.4 and floor-pinned in BruteRouteRecallSpec —
     // opt-in degraded mode, never a silent substitution.
     "j_knn_per_vector" -> { (s, d) =>
       graft.functions.VectorExprs.register(s)

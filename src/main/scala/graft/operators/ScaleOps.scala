@@ -76,8 +76,9 @@ object ScaleOps {
     * lineitem for `c_join_bucketed` — both bucketed (and bucket-sorted)
     * on the join key with the SAME bucket count
     * ([[LlmOps.storeBuckets]]: conf override or one bucket per core —
-    * the r7 IncScale lesson; a fixed 8 under-parallelizes every later
-    * read on a large box), so the join and the downstream key-grouped
+    * the round-6 bucket-count lesson in SCALE.md Round-3 addenda; a
+    * fixed 8 under-parallelizes every later read on a large box), so
+    * the join and the downstream key-grouped
     * aggregation plan with ZERO Exchange: the write-side shuffle
     * happened once at bucket time and every subsequent join/agg on the
     * key reuses it (the DedupArtifacts / AnnIndex store discipline

@@ -61,7 +61,7 @@ object UdfOps {
       // sibling, and with spark.graft.brute.route=true the IVF pair
       // set's global top-10 is returned instead (the exact shape
       // j_sim_cosine_topk routes to — same (vec_a, vec_b, cos) schema,
-      // recall quantified by graft.BruteRecall and floor-pinned in
+      // recall quantified in SCALE.md §r18.4 and floor-pinned in
       // BruteRouteRecallSpec). Routing caveat as on the sibling entry:
       // the IVF set only surfaces pairs with cos ≥ its τ floor inside
       // probed cells, so the routed top-10 is opt-in degraded mode,

@@ -218,7 +218,7 @@ object Windows {
     // Centered 3-row moving average per customer. r17 rewrite (VERDICT
     // r16 item 6): the plain per-key window sorts each key in ONE task,
     // so a whale key owns a single unsplittable task — measured on a
-    // skewed synthetic (one key holding 20% of rows, graft.SkewGen)
+    // skewed synthetic (one key holding 20% of rows, SCALE.md §r17.3)
     // the warm exponent was 0.98 over a 10× step. Cure = ROUTE, then
     // band: a cheap partial-aggregable key-count pass finds whale keys
     // (> spark.graft.window.whaleRows rows, default 10⁵ — a routing

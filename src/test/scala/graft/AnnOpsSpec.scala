@@ -503,7 +503,8 @@ class AnnOpsSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     graft.functions.VectorExprs.register(spark)
     // three exact copies of every sf0.001 embedding, shifted ids —
-    // the ScaleGen clique stress in miniature, so multi-member dup
+    // the clique stress of SCALE.md's 10× corpus (exact ×k copies) in
+    // miniature, so multi-member dup
     // groups (and the self-exclusion +1 rule) are actually exercised
     val dir = java.nio.file.Files.createTempDirectory("dupann").toString
     val emb = Tables.embeddings(spark, sfDir)

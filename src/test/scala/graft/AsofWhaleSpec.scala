@@ -10,12 +10,13 @@ import org.apache.spark.sql.functions._
   * join+top-1 form it replaced materializes every (purchase × prior
   * click) pair per user and measured DNF (>560 s) at 1 M rows with a
   * 20% whale. The bench evidence lives in SCALE.md; this spec makes
-  * the disposition a TEST on a SkewGen-shaped fixture so a future
-  * regression (someone re-introducing a pair-materializing form, or a
-  * heavier whale shape breaking the carry algebra) trips here instead
+  * the disposition a TEST on a whale fixture shaped like SCALE.md
+  * §r18.1's (one user holding 20% of rows) so a future regression
+  * (someone re-introducing a pair-materializing form, or a heavier
+  * whale shape breaking the carry algebra) trips here instead
   * of surfacing as a bench surprise:
   *  1. value parity: each entry equals its join+top-1 reference on the
-  *     whale fixture (the HashQ parity pin, in-suite);
+  *     whale fixture (SCALE.md §r18.1's bit-identity gate, in-suite);
   *  2. volume bound: the entry's total shuffle WRITE records stay
   *     O(n) — a generous 8·n ceiling, where the whale's pair count
   *     (what the join form would shuffle through its window) is ~100×
@@ -24,7 +25,7 @@ import org.apache.spark.sql.functions._
 class AsofWhaleSpec extends SparkSpec {
 
   /** sf0.001 events replicated 30× (disjoint event_id/user_id ranges
-    * per replica), then the SkewGen whale rule: a deterministic 1/5 of
+    * per replica), then the §r18.1 whale rule: a deterministic 1/5 of
     * all rows re-keyed to user 1. */
   private lazy val whaleDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("asofwhale").toString

@@ -7,7 +7,7 @@ import graft.operators.BruteGuard
   * sibling for a guarded O(n²) baseline with a DISCLOSED recall
   * caveat; this spec pins the measured behavior on the unit fixture so
   * the caveat stays a number, not a vibe. Measured at scale
-  * (graft.BruteRecall, SCALE.md §r18): top-10 overlap 10/10 on every
+  * (SCALE.md §r18.4): top-10 overlap 10/10 on every
   * shape (sf0.1 / sf1 clique / sf1z zipf); pair recall 0.95–0.975,
   * precision 1.0 (the sibling verifies exact cosines on candidates, so
   * it can only miss, never invent).
